@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.stac.{HlsCollections, StacJobs, StacPipeline, StacSynth}
+import graft.stac.{HlsCollections, StacJobs, StacPipeline}
 
 /** The reference's CLI (cli.py): two verbs over the pipeline library,
   * `cache-daily-links` and `write-monthly-geoparquet`, with the same
@@ -11,18 +11,20 @@ import graft.stac.{HlsCollections, StacJobs, StacPipeline, StacSynth}
   * via `--message '<json>'` (handler.py:22–120 → [[StacJobs]]), so
   * existing queue payloads drive the same code path as the CLI.
   *
-  * The granule feed comes from `--catalog-dir` (a testdata SF
-  * directory; the reference queries CMR live — see [[graft.stac.CmrSource]]
-  * for that source model).
+  * The granule feed comes from `--catalog-dir`: a parquet dataset
+  * with the columns `granule_id, collection, ts, lon, lat, links`
+  * that [[StacPipeline.cacheDailyStacJsonLinks]] reads. The reference
+  * queries CMR live; see [[graft.stac.CmrSource]] for that source.
   */
 object Main {
 
   private val usage =
     """usage:
       |  graft.Main cache-daily-links <HLSL30|HLSS30> <YYYY-MM-DD> <dest>
-      |      --catalog-dir <dir> [--bounding-box w,s,e,n]
+      |      --catalog-dir <granule-feed parquet> [--bounding-box w,s,e,n]
       |      [--protocol https|s3] [--skip-existing]
-      |  graft.Main cache-daily-links --message '<json>' --catalog-dir <dir> [<dest>]
+      |  graft.Main cache-daily-links --message '<json>'
+      |      --catalog-dir <granule-feed parquet> [<dest>]
       |  graft.Main write-monthly-geoparquet <HLSL30|HLSS30> <YYYY-MM-DD> <dest>
       |      [--version <v>] [--require-complete-links] [--skip-existing]
       |""".stripMargin
@@ -75,13 +77,6 @@ object Main {
     }
   }
 
-  /** Reference error wording for bad dates (handler.py via StacJobs). */
-  private def parseDate(s: String): java.time.LocalDate =
-    try java.time.LocalDate.parse(s) catch {
-      case _: Exception => throw new IllegalArgumentException(
-        s"Invalid date format: $s. Expected ISO format (YYYY-MM-DD)")
-    }
-
   private def cacheDailyLinks(spark: SparkSession, pos: Seq[String],
                               flags: Map[String, String]): Unit = {
     val catalogDir = flags.getOrElse("--catalog-dir",
@@ -94,26 +89,16 @@ object Main {
       case None =>
         if (pos.length < 3) throw new IllegalArgumentException(
           "cache-daily-links needs <collection> <date> <dest>")
-        val bbox = flags.get("--bounding-box").map { s =>
-          val p = s.split(",").map(_.trim.toDouble)
-          if (p.length != 4) throw new IllegalArgumentException(
-            s"Invalid bounding_box: expected 4 values, got ${p.length}")
-          (p(0), p(1), p(2), p(3))
-        }
-        val protocol = flags.getOrElse("--protocol", "https")
-        if (protocol != "s3" && protocol != "https")
-          throw new IllegalArgumentException(
-            s"Invalid protocol: $protocol. Must be 's3' or 'https'")
-        StacJobs.CacheDailyRequest(
-          HlsCollections.byName(pos(0)),
-          parseDate(pos(1)).toString,
-          Some(pos(2)), bbox, protocol,
+        StacJobs.cacheDailyRequest(
+          HlsCollections.byName(pos(0)), pos(1), Some(pos(2)),
+          flags.get("--bounding-box").map(_.split(",").map(_.trim.toDouble).toSeq),
+          flags.getOrElse("--protocol", "https"),
           flags.contains("--skip-existing"))
     }
     val dest = req.dest.getOrElse(
       throw new IllegalArgumentException("Missing required parameter: 'dest'"))
     val wrote = StacPipeline.cacheDailyStacJsonLinks(
-      spark, StacSynth.catalog(spark, catalogDir), dest,
+      spark, spark.read.parquet(catalogDir), dest,
       req.collection.collectionId, req.date, req.boundingBox,
       req.protocol, req.skipExisting)
     println(s"""{"verb": "cache-daily-links", "collection": "${req.collection.name}", "date": "${req.date}", "wrote": $wrote}""")
@@ -125,7 +110,7 @@ object Main {
       "write-monthly-geoparquet needs <collection> <yearmonth> <dest>")
     val collection = HlsCollections.byName(pos(0))
     // YYYY-MM-DD, day ignored (write.py:104-106)
-    val ym = parseDate(pos(1))
+    val ym = StacJobs.parseDate(pos(1))
     val wrote = StacPipeline.writeMonthlyStacGeoparquet(
       spark, pos(2), collection.collectionId, ym.getYear, ym.getMonthValue,
       version = flags.getOrElse("--version", "0.1"),

@@ -20,12 +20,34 @@ import org.apache.spark.sql.functions._
   */
 object StacPipeline {
 
-  /** Daily link cache root (mirrors LINK_PATH_PREFIX, constants.py:6). */
-  def linksRoot(dest: String): String = s"$dest/links"
+  /** One day of `collectionId`'s granules with their STAC JSON link
+    * (links.py:61-117): the closed [00:00:00, 23:59:59] day window
+    * (links.py:104-106), the optional bbox, and the first `protocol`
+    * link ending in stac.json; granules without one are dropped.
+    */
+  private def dailyLinks(
+      catalog: DataFrame,
+      collectionId: String,
+      date: String,
+      bbox: Option[(Double, Double, Double, Double)],
+      protocol: String): DataFrame = {
+    val spark = catalog.sparkSession
+    import spark.implicits._
+    val inDay = catalog
+      .filter($"collection" === collectionId)
+      .filter($"ts" >= lit(s"$date 00:00:00").cast("timestamp") &&
+        $"ts" <= lit(s"$date 23:59:59").cast("timestamp"))
+    bbox.fold(inDay) { case (w, s, e, n) =>
+      Validation.validateBbox(w, s, e, n)
+      inDay.filter($"lon" >= w && $"lon" <= e && $"lat" >= s && $"lat" <= n)
+    }.withColumn("stac_link",
+        graft.functions.first_link($"links", protocol, "stac.json"))
+      .filter($"stac_link".isNotNull)
+  }
 
   def cacheDailyStacJsonLinks(
       spark: SparkSession,
-      catalog: DataFrame, // granule feed: collection, ts, lon, lat, links
+      catalog: DataFrame, // granule feed: granule_id, collection, ts, lon, lat, links
       dest: String,
       collectionId: String,
       date: String, // YYYY-MM-DD
@@ -33,24 +55,10 @@ object StacPipeline {
       protocol: String = "https",
       skipExisting: Boolean = false): Boolean = {
     import spark.implicits._
-    val day = java.time.LocalDate.parse(date)
-    val outPath = s"${linksRoot(dest)}/collection=$collectionId/" +
-      s"year=${day.getYear}/month=${day.getMonthValue}/day=${day.getDayOfMonth}"
+    val outPath = HlsCollections.dailyCachePath(dest, collectionId,
+      java.time.LocalDate.parse(date))
     if (skipExisting && StacWrite.exists(spark, outPath)) return false
-
-    val dayStart = s"$date 00:00:00"
-    val dayEnd = s"$date 23:59:59" // closed [start, start+1d-1s], links.py:104-106
-    var q = catalog
-      .filter($"collection" === collectionId)
-      .filter($"ts" >= lit(dayStart).cast("timestamp") &&
-        $"ts" <= lit(dayEnd).cast("timestamp"))
-    bbox.foreach { case (w, s, e, n) =>
-      Validation.validateBbox(w, s, e, n)
-      q = q.filter($"lon" >= w && $"lon" <= e && $"lat" >= s && $"lat" <= n)
-    }
-    q.withColumn("stac_link",
-        graft.functions.first_link($"links", protocol, "stac.json"))
-      .filter($"stac_link".isNotNull)
+    dailyLinks(catalog, collectionId, date, bbox, protocol)
       .select($"granule_id", $"stac_link", $"lon", $"lat", $"ts")
       .write.mode(SaveMode.Overwrite).parquet(outPath)
     true
@@ -67,20 +75,14 @@ object StacPipeline {
     */
   def writeDailyLinksJsonArray(
       spark: SparkSession,
-      catalog: org.apache.spark.sql.DataFrame,
+      catalog: DataFrame,
       dest: String,
       collectionId: String,
       date: String,
       protocol: String = "https"): String = {
     import spark.implicits._
     val day = java.time.LocalDate.parse(date)
-    val links = catalog
-      .filter($"collection" === collectionId)
-      .filter($"ts" >= lit(s"$date 00:00:00").cast("timestamp") &&
-        $"ts" <= lit(s"$date 23:59:59").cast("timestamp"))
-      .withColumn("stac_link",
-        graft.functions.first_link($"links", protocol, "stac.json"))
-      .filter($"stac_link".isNotNull)
+    val links = dailyLinks(catalog, collectionId, date, None, protocol)
       .select($"stac_link").orderBy($"stac_link")
       .as[String].collect()
     val path = f"$dest/${HlsCollections.linkPath(collectionId,
@@ -120,9 +122,10 @@ object StacPipeline {
   def readMonthlyLinks(spark: SparkSession, dest: String,
                        collectionId: String, year: Int, month: Int): DataFrame = {
     import spark.implicits._
+    val root = HlsCollections.linksRoot(dest)
     spark.read
-      .option("basePath", linksRoot(dest))
-      .parquet(linksRoot(dest))
+      .option("basePath", root)
+      .parquet(root)
       .filter($"collection" === collectionId &&
         $"year" === year && $"month" === month)
   }
@@ -146,9 +149,8 @@ object StacPipeline {
       pageSize: Int = 2000,
       skipExisting: Boolean = false): Boolean = {
     import spark.implicits._
-    val day = java.time.LocalDate.parse(date)
-    val outPath = s"${linksRoot(dest)}/collection=$collectionId/" +
-      s"year=${day.getYear}/month=${day.getMonthValue}/day=${day.getDayOfMonth}"
+    val outPath = HlsCollections.dailyCachePath(dest, collectionId,
+      java.time.LocalDate.parse(date))
     if (skipExisting && StacWrite.exists(spark, outPath)) return false
     CmrSource.spoolTo(spark, fetcher, spoolDir, pageSize)
     CmrSource.stacJsonLinks(CmrSource.entries(spark, spoolDir), protocol)
@@ -164,7 +166,9 @@ object StacPipeline {
     * separated — see [[StacFetch]]), write the successful items as
     * monthly geoparquet, and RETURN the failed links (url, error) for
     * accounting/retry — the (items, failed) contract of
-    * fetch.py:78–88.
+    * fetch.py:78–88. The failed side is materialized before the
+    * fetch cache is released, so each link is fetched exactly once
+    * and no fetched bodies stay cached after the call.
     */
   def fetchAndWriteMonthly(
       spark: SparkSession,
@@ -176,13 +180,35 @@ object StacPipeline {
       version: String = "0.1",
       maxConcurrent: Int = 50): DataFrame = {
     val links = readMonthlyLinks(spark, dest, collectionId, year, month)
-    val (items, failed) =
-      StacFetch.fetchItems(links, "stac_link", transport, maxConcurrent)
-    StacWrite.writeMonthly(spark, items, dest, version, collectionId,
-      year, month)
-    failed
+    StacFetch.fetchItemsScoped(links, "stac_link", transport,
+        maxConcurrent) { (items, failed) =>
+      StacWrite.writeMonthly(spark, items, dest, version, collectionId,
+        year, month)
+      failed.localCheckpoint(true)
+    }
   }
 
+  /** Month completeness (write.py:158-189): every expected day's link
+    * cache exists ([[HlsCollections.expectedDays]]). The reference
+    * compares link file paths, not data rows, so a day cached with
+    * zero granules counts as present. Throws naming the missing days.
+    */
+  def requireCompleteLinks(spark: SparkSession, dest: String,
+                           collectionId: String, year: Int, month: Int): Unit = {
+    val missing = HlsCollections.expectedDays(collectionId, year, month)
+      .filterNot(d => StacWrite.exists(spark,
+        HlsCollections.dailyCachePath(dest, collectionId, d)))
+    if (missing.nonEmpty) {
+      throw new IllegalStateException(
+        s"$collectionId $year-$month: missing daily link caches for " +
+          s"days ${missing.map(_.getDayOfMonth).mkString(", ")}")
+    }
+  }
+
+  /** Skip-existing comes first (write.py:148-151), then completeness
+    * (write.py:158-189): an already-written month is skipped even if
+    * its caches have since been pruned.
+    */
   def writeMonthlyStacGeoparquet(
       spark: SparkSession,
       dest: String,
@@ -193,32 +219,15 @@ object StacPipeline {
       requireCompleteLinks: Boolean = false,
       skipExisting: Boolean = false): Boolean = {
     import spark.implicits._
-    // Completeness = every expected daily CACHE FILE exists (a day may
-    // legitimately hold zero granules) — the reference compares link
-    // file paths, not data rows (write.py:158-189).
-    if (requireCompleteLinks) {
-      val monthStart = java.time.LocalDate.of(year, month, 1)
-      val origin = StacSynth.OriginDates.get(collectionId)
-        .map(java.time.LocalDate.parse)
-      val firstDay = origin match {
-        case Some(o) if o.getYear == year && o.getMonthValue == month =>
-          o.getDayOfMonth
-        case _ => 1
-      }
-      val missing = (firstDay to monthStart.lengthOfMonth()).filterNot { d =>
-        StacWrite.exists(spark, s"${linksRoot(dest)}/collection=" +
-          s"$collectionId/year=$year/month=$month/day=$d")
-      }
-      if (missing.nonEmpty) {
-        throw new IllegalStateException(
-          s"$collectionId $year-$month: missing daily link caches for " +
-            s"days ${missing.mkString(", ")}")
-      }
-    }
+    if (skipExisting && StacWrite.exists(spark,
+      StacWrite.monthPath(dest, version, collectionId, year, month)))
+      return false
+    if (requireCompleteLinks)
+      this.requireCompleteLinks(spark, dest, collectionId, year, month)
     val monthly = readMonthlyLinks(spark, dest, collectionId, year, month)
       .withColumn("collection", lit(collectionId))
       .withColumn("url_stac", $"stac_link")
     StacWrite.writeMonthly(spark, monthly, dest, version, collectionId,
-      year, month, requireCompleteLinks = false, skipExisting)
+      year, month)
   }
 }

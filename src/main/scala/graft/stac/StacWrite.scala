@@ -1,5 +1,7 @@
 package graft.stac
 
+import java.time.LocalDate
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -25,26 +27,21 @@ object StacWrite {
   def parquetRoot(dest: String, version: String, collectionId: String): String =
     s"$dest/v$version/$collectionId"
 
+  /** One month's partition under [[parquetRoot]]. */
+  def monthPath(dest: String, version: String, collectionId: String,
+                year: Int, month: Int): String =
+    s"${parquetRoot(dest, version, collectionId)}/year=$year/month=$month"
+
   def exists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** Write one month of items. Returns true if written, false when
-    * skipped (`skipExisting`, reference: write.py:148-151).
-    * `requireCompleteLinks` (write.py:158-189): every expected day of
-    * the month must be present in the batch, honoring the collection
-    * origin date for the origin month.
-    *
-    * File-count planning: a fixed partition count writes tiny files
-    * for sparse months and oversized files for dense ones — the
-    * small-file problem that degrades every downstream scan at scale.
-    * With `targetRowsPerFile` set, the sink counts the month (a
-    * metadata-cheap columnar count — the ONE extra pass a compaction
-    * planner is worth) and range-partitions into
-    * ceil(rows / target) ∈ [1, spatialPartitions] files, so output
-    * file sizes track data volume and `spatialPartitions` becomes the
-    * parallelism CAP instead of the unconditional file count.
+    * skipped (`skipExisting`, reference: write.py:148-151). Month
+    * completeness is a property of the daily link caches, not of the
+    * items, and is checked by
+    * [[StacPipeline.writeMonthlyStacGeoparquet]].
     */
   def writeMonthly(
       spark: SparkSession,
@@ -54,64 +51,26 @@ object StacWrite {
       collectionId: String,
       year: Int,
       month: Int,
-      requireCompleteLinks: Boolean = false,
       skipExisting: Boolean = false,
-      spatialPartitions: Int = 16,
-      clusterBy: String = "hilbert",
-      targetRowsPerFile: Option[Long] = None): Boolean = {
+      spatialPartitions: Int = 16): Boolean = {
     import spark.implicits._
-    require(clusterBy == "hilbert" || clusterBy == "morton",
-      s"clusterBy must be 'hilbert' or 'morton', got $clusterBy")
+    if (skipExisting &&
+      exists(spark, monthPath(dest, version, collectionId, year, month)))
+      return false
 
-    val root = parquetRoot(dest, version, collectionId)
-    val monthPath = s"$root/year=$year/month=$month"
-    if (skipExisting && exists(spark, monthPath)) return false
-
-    val monthStart = java.time.LocalDate.of(year, month, 1)
-    val monthly = items
+    val monthStart = LocalDate.of(year, month, 1)
+    items
       .filter($"collection" === collectionId)
       .filter(to_date($"ts") >= lit(monthStart.toString).cast("date") &&
         to_date($"ts") < lit(monthStart.plusMonths(1).toString).cast("date"))
-
-    if (requireCompleteLinks) {
-      val origin = StacSynth.OriginDates.get(collectionId)
-        .map(java.time.LocalDate.parse)
-      val firstDay = origin match {
-        case Some(o) if o.getYear == year && o.getMonthValue == month =>
-          o.getDayOfMonth
-        case _ => 1
-      }
-      val expected = (firstDay to monthStart.lengthOfMonth()).toSet
-      val present = monthly.select(dayofmonth(to_date($"ts")))
-        .distinct().as[Int].collect().toSet
-      val missing = expected -- present
-      if (missing.nonEmpty) {
-        throw new IllegalStateException(
-          s"$collectionId $year-$month: missing daily links for days " +
-            missing.toSeq.sorted.mkString(", "))
-      }
-    }
-
-    val plannedPartitions = targetRowsPerFile match {
-      case Some(target) =>
-        require(target > 0, s"targetRowsPerFile must be > 0, got $target")
-        val rows = monthly.count()
-        math.min(spatialPartitions,
-          math.max(1L, (rows + target - 1) / target)).toInt
-      case None => spatialPartitions
-    }
-    monthly
       // geoparquet geometry column (WKB point of the granule centroid)
       .withColumn("geometry", graft.functions.wkb_point($"lon", $"lat"))
       .withColumn("gx", floor(($"lon" + 180.0) / 360.0 * 16384).cast("int"))
       .withColumn("gy", floor(($"lat" + 90.0) / 180.0 * 16384).cast("int"))
-      .withColumn("cluster_key",
-        if (clusterBy == "morton")
-          graft.functions.morton_index($"gx", $"gy", 14)
-        else hilbert_index($"gx", $"gy", 14))
+      .withColumn("cluster_key", hilbert_index($"gx", $"gy", 14))
       .withColumn("year", lit(year))
       .withColumn("month", lit(month))
-      .repartitionByRange(plannedPartitions, $"cluster_key")
+      .repartitionByRange(spatialPartitions, $"cluster_key")
       .sortWithinPartitions($"cluster_key")
       .drop("gx", "gy")
       .write
@@ -124,7 +83,7 @@ object StacWrite {
       .option("partitionOverwriteMode", "dynamic")
       .option("compression", "zstd")
       .partitionBy("year", "month")
-      .save(root)
+      .save(parquetRoot(dest, version, collectionId))
     true
   }
 }
@@ -148,4 +107,29 @@ object HlsCollections {
   /** links/{cid}/{y}/{m}/{y}-{m}-{d}.json (constants.py:6-7). */
   def linkPath(collectionId: String, year: Int, month: Int, day: Int): String =
     f"links/$collectionId/$year/$month%02d/$year-$month%02d-$day%02d.json"
+
+  /** Daily link cache root (mirrors LINK_PATH_PREFIX, constants.py:6). */
+  def linksRoot(dest: String): String = s"$dest/links"
+
+  /** One day's link cache: the `collection=/year=/month=/day=`
+    * partition under [[linksRoot]].
+    */
+  def dailyCachePath(dest: String, collectionId: String,
+                     day: LocalDate): String =
+    s"${linksRoot(dest)}/collection=$collectionId/year=${day.getYear}/" +
+      s"month=${day.getMonthValue}/day=${day.getDayOfMonth}"
+
+  /** The days a month's link caches must cover (write.py:158-189):
+    * every day of the month, from the origin day in the collection's
+    * origin month (COLLECTION_ORIGIN_DATES, constants.py:11-14).
+    */
+  def expectedDays(collectionId: String, year: Int, month: Int): Seq[LocalDate] = {
+    val monthStart = LocalDate.of(year, month, 1)
+    val first = all.find(_.collectionId == collectionId)
+      .map(c => LocalDate.parse(c.originDate))
+      .filter(o => o.getYear == year && o.getMonthValue == month)
+      .getOrElse(monthStart)
+    Iterator.iterate(first)(_.plusDays(1))
+      .takeWhile(_.getMonthValue == month).toSeq
+  }
 }

@@ -7,6 +7,17 @@ import org.apache.spark.sql.functions._
 class MainSpec extends SparkSpecBase {
   import spark.implicits._
 
+  /** The catalog fixture written as the granule-feed parquet that
+    * `--catalog-dir` reads.
+    */
+  private lazy val feedDir: String = {
+    val dir = Files.createTempDirectory("graft-cli-feed").resolve("feed").toString
+    graft.stac.StacSynth.catalog(spark, sf)
+      .select("granule_id", "collection", "ts", "lon", "lat", "links")
+      .write.parquet(dir)
+    dir
+  }
+
   test("CLI verbs drive the pipeline end-to-end against a temp dir") {
     val tmp = Files.createTempDirectory("graft-cli").toString
     val catalog = graft.stac.StacSynth.catalog(spark, sf).cache()
@@ -18,13 +29,13 @@ class MainSpec extends SparkSpecBase {
 
     // first day: positional form; second day: the A17 message contract
     assert(Main.run(Array("cache-daily-links", "HLSS30",
-      f"1996-03-${days(0)}%02d", tmp, "--catalog-dir", sf),
+      f"1996-03-${days(0)}%02d", tmp, "--catalog-dir", feedDir),
       Some(spark)) === 0)
     val d2 = f"1996-03-${days(1)}%02d"
     val msg = s"""{"collection": "HLSS30", "date": "$d2",
       "protocol": "https", "skip_existing": false}"""
     assert(Main.run(Array("cache-daily-links", tmp, "--message", msg,
-      "--catalog-dir", sf), Some(spark)) === 0)
+      "--catalog-dir", feedDir), Some(spark)) === 0)
     val cached = spark.read.option("basePath", s"$tmp/links")
       .parquet(s"$tmp/links")
     val nCached = cached.count()
@@ -44,9 +55,9 @@ class MainSpec extends SparkSpecBase {
       tmp, "--require-complete-links"), Some(spark)) === 1)
     // bad input exits 2 with the reference's error wording
     assert(Main.run(Array("cache-daily-links", "NOPE", "1996-03-01", tmp,
-      "--catalog-dir", sf), Some(spark)) === 2)
+      "--catalog-dir", feedDir), Some(spark)) === 2)
     assert(Main.run(Array("cache-daily-links", "HLSS30", "03/01/1996", tmp,
-      "--catalog-dir", sf), Some(spark)) === 2)
+      "--catalog-dir", feedDir), Some(spark)) === 2)
     assert(Main.run(Array("no-such-verb"), Some(spark)) === 2)
     assert(Main.run(Array.empty[String], Some(spark)) === 2)
   }
@@ -59,16 +70,16 @@ class MainSpec extends SparkSpecBase {
       .select(date_format($"ts", "yyyy-MM-dd")).orderBy($"ts")
       .head().getString(0)
     assert(Main.run(Array("cache-daily-links", "HLSL30", day,
-      s"$tmp/all", "--catalog-dir", sf), Some(spark)) === 0)
+      s"$tmp/all", "--catalog-dir", feedDir), Some(spark)) === 0)
     assert(Main.run(Array("cache-daily-links", "HLSL30", day,
-      s"$tmp/bb", "--catalog-dir", sf,
+      s"$tmp/bb", "--catalog-dir", feedDir,
       "--bounding-box", "-150,-50,-100,50"), Some(spark)) === 0)
     val all = spark.read.parquet(s"$tmp/all/links").count()
     val bb = spark.read.parquet(s"$tmp/bb/links").count()
     assert(bb <= all)
     // malformed bbox rejected
     assert(Main.run(Array("cache-daily-links", "HLSL30", day,
-      s"$tmp/x", "--catalog-dir", sf, "--bounding-box", "1,2,3"),
+      s"$tmp/x", "--catalog-dir", feedDir, "--bounding-box", "1,2,3"),
       Some(spark)) === 2)
     // a flag token is never consumed as a value: `--protocol
     // --skip-existing` is a missing value (exit 2), not
@@ -76,7 +87,7 @@ class MainSpec extends SparkSpecBase {
     val err = new java.io.ByteArrayOutputStream()
     val rc = Console.withErr(err) {
       Main.run(Array("cache-daily-links", "HLSL30", day, s"$tmp/y",
-        "--catalog-dir", sf, "--protocol", "--skip-existing"), Some(spark))
+        "--catalog-dir", feedDir, "--protocol", "--skip-existing"), Some(spark))
     }
     assert(rc === 2)
     assert(err.toString.contains("--protocol requires a value"))

@@ -1,8 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import java.time.LocalDate
 
-import graft.stac.{StacFetch, StacPipeline, StacSynth}
+import org.apache.spark.sql.DataFrame
+
+import graft.stac.{HlsCollections, StacFetch, StacPipeline, StacSynth, StacWrite}
 
 /** In-memory transport: serves the catalog's own item_json per URL,
   * throws for URLs in the fail set; counts per-netloc opens so reuse
@@ -41,8 +44,128 @@ class FlakyTransport(bodies: Map[String, String], flaky: Set[String],
   }
 }
 
+/** Serves `bodies`, throws for `failing`, counts every get per URL. */
+object CountingTransport {
+  val gets = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+}
+
+class CountingTransport(bodies: Map[String, String], failing: Set[String])
+    extends StacFetch.Transport {
+  def open(scheme: String, netloc: String): String => Array[Byte] = { url =>
+    CountingTransport.gets.merge(url, 1, (a, b) => a + b)
+    if (failing(url)) throw new RuntimeException(s"503 on $url")
+    bodies(url).getBytes("UTF-8")
+  }
+}
+
 class StacPipelineSpec extends SparkSpecBase {
   import spark.implicits._
+
+  /** A granule feed with one granule of `cid` at noon of each day. */
+  private def feed(cid: String, days: Seq[LocalDate]): DataFrame =
+    days.zipWithIndex.map { case (d, i) =>
+      (i.toLong, cid, java.sql.Timestamp.valueOf(s"$d 12:00:00"),
+        -100.0 + i, 40.0,
+        Seq(s"s3://b/G$i.json", s"https://data.example.com/G${i}_stac.json"))
+    }.toDF("granule_id", "collection", "ts", "lon", "lat", "links")
+
+  /** Caches each of `days` from `granules`, empty days included. */
+  private def cacheDays(dest: String, cid: String, days: Seq[LocalDate],
+                        granules: DataFrame): Unit =
+    days.foreach(d => assert(StacPipeline.cacheDailyStacJsonLinks(spark,
+      granules, dest, cid, d.toString)))
+
+  private def deleteCache(dest: String, cid: String, day: LocalDate): Unit = {
+    val p = new org.apache.hadoop.fs.Path(
+      HlsCollections.dailyCachePath(dest, cid, day))
+    assert(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(p, true))
+  }
+
+  test("month completeness: HLSL30's origin month starts at 2013-04-11; a pruned day is named alone") {
+    val tmp = Files.createTempDirectory("graft-origin").toString
+    val cid = HlsCollections.HLSL30.collectionId
+    val days = (11 to 30).map(LocalDate.of(2013, 4, _))
+    cacheDays(tmp, cid, days, feed(cid, days))
+    assert(StacPipeline.writeMonthlyStacGeoparquet(spark, tmp, cid, 2013, 4,
+      requireCompleteLinks = true))
+    assert(spark.read.parquet(StacWrite.monthPath(tmp, "0.1", cid, 2013, 4))
+      .count() === days.length)
+    deleteCache(tmp, cid, LocalDate.of(2013, 4, 12))
+    val e = intercept[IllegalStateException] {
+      StacPipeline.requireCompleteLinks(spark, tmp, cid, 2013, 4)
+    }
+    assert(e.getMessage ===
+      "HLSL30_2.0 2013-4: missing daily link caches for days 12")
+  }
+
+  test("month completeness: a day cached with zero granules counts as present") {
+    val tmp = Files.createTempDirectory("graft-empty-day").toString
+    val cid = HlsCollections.HLSS30.collectionId // origin 2015-11-28
+    val days = (28 to 30).map(LocalDate.of(2015, 11, _))
+    cacheDays(tmp, cid, days, feed(cid, days.filter(_.getDayOfMonth != 29)))
+    assert(spark.read.parquet(
+      HlsCollections.dailyCachePath(tmp, cid, days(1))).count() === 0)
+    assert(StacPipeline.writeMonthlyStacGeoparquet(spark, tmp, cid, 2015, 11,
+      requireCompleteLinks = true))
+    assert(spark.read.parquet(StacWrite.monthPath(tmp, "0.1", cid, 2015, 11))
+      .count() === 2)
+  }
+
+  test("writeMonthlyStacGeoparquet: skip-existing comes before completeness") {
+    val tmp = Files.createTempDirectory("graft-skip-first").toString
+    val cid = HlsCollections.HLSS30.collectionId
+    val days = (28 to 30).map(LocalDate.of(2015, 11, _))
+    cacheDays(tmp, cid, days, feed(cid, days))
+    assert(StacPipeline.writeMonthlyStacGeoparquet(spark, tmp, cid, 2015, 11))
+    // the month is written; its caches are pruned afterwards
+    deleteCache(tmp, cid, days(1))
+    assert(!StacPipeline.writeMonthlyStacGeoparquet(spark, tmp, cid, 2015, 11,
+      requireCompleteLinks = true, skipExisting = true))
+    val e = intercept[IllegalStateException] {
+      StacPipeline.writeMonthlyStacGeoparquet(spark, tmp, cid, 2015, 11,
+        requireCompleteLinks = true)
+    }
+    assert(e.getMessage.endsWith("days 29"))
+  }
+
+  test("fetchAndWriteMonthly gets each link once and releases its fetch cache") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.functions.{month, to_date, year}
+    import scala.jdk.CollectionConverters._
+    val tmp = Files.createTempDirectory("graft-fetch-once").toString
+    val catalog = StacSynth.catalog(spark, sf).cache()
+    val cid = "HLSL30_2.0"
+    // a month that holds a planted fetch failure
+    val ym = catalog.filter($"collection" === cid && $"fetch_failed")
+      .select(year($"ts"), month($"ts")).as[(Int, Int)].head()
+    val days = catalog.filter($"collection" === cid &&
+        year($"ts") === ym._1 && month($"ts") === ym._2)
+      .select(to_date($"ts").cast("string")).distinct().as[String]
+      .collect().map(LocalDate.parse).toSeq
+    cacheDays(tmp, cid, days, catalog)
+    val links = StacPipeline.readMonthlyLinks(spark, tmp, cid, ym._1, ym._2)
+      .select($"stac_link").as[String].collect().toSet
+    val bodies = catalog.select($"url_stac", $"item_json")
+      .as[(String, String)].collect().toMap
+    val failing = catalog.filter($"fetch_failed")
+      .select($"url_stac").as[String].collect().toSet.intersect(links)
+    assert(failing.nonEmpty, "the month must hold planted fetch failures")
+    val cachedBefore = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    CountingTransport.gets.clear()
+    val failed = StacPipeline.fetchAndWriteMonthly(spark, tmp, cid,
+      ym._1, ym._2, new CountingTransport(bodies, failing))
+    assert(failed.collect().map(_.getString(0)).toSet === failing)
+    val gets = CountingTransport.gets.asScala
+    assert(gets.keySet === links)
+    assert(gets.values.forall(_ == 1), "every link is fetched exactly once")
+    // the only blocks the call leaves are the failed side's own
+    val ownRdds = failed.queryExecution.logical
+      .collect { case r: LogicalRDD => r.rdd.id }.toSet
+    val left = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet --
+      cachedBefore -- ownRdds
+    assert(left.isEmpty, s"RDDs left cached by the call: $left")
+  }
 
   test("dateRange: origin-date default, yesterday default, validation") {
     import graft.stac.HlsCollections

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registered query at
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line to stdout AND writes the
@@ -25,22 +24,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Harness.cpus
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     // 600 s: the 276-query sequential pass under ambient co-tenant
     // load can exceed the old 480 s before the shared-session
     // streaming block gets its turn; the block itself is ~10 s
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "600").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // JVM/session warmup so the first timed query doesn't absorb
-    // executor startup + codegen compiler init (~8-10s otherwise)
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+    val spark = Harness.session()
+    Harness.warmUp(spark)
 
     // 3-decimal (ms) precision keeps the JSON line short enough for the
     // driver's bounded stdout-tail window — full nanos overflowed it
@@ -80,11 +71,8 @@ object Bench {
 
     // dev-only subset runs (e.g. SPARK_GRAFT_BENCH_ONLY=stream_): the
     // driver never sets this, so its per-round artifact stays full
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").toSeq).getOrElse(Seq.empty)
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => only.exists(n.startsWith) }
+    val selected = Harness.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").toSeq).getOrElse(Seq.empty), _ startsWith _)
 
     // rows-hash for streaming-parity checks: order-insensitive, cheap
     // (streaming outputs are small aggregate tables)

@@ -16,9 +16,6 @@ import org.apache.spark.sql.SparkSession
   */
 object EmptyCheck {
 
-  val tables = Seq("region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Write an n-row schema-preserving copy of every table (n=0: the
     * empty-partition shape; n=1: the single-row/zero-variance shape).
     * The copies must be single FILES named `<table>.parquet` (the
@@ -31,7 +28,7 @@ object EmptyCheck {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     Files.createDirectories(Paths.get(outDir))
     val stage = Files.createTempDirectory("graft_empty_stage").toString
-    tables.foreach { t =>
+    Tables.all.foreach { t =>
       spark.read.parquet(s"$srcDir/$t.parquet").limit(rows)
         .coalesce(1).write.mode("overwrite").parquet(s"$stage/$t")
       val part = Files.list(Paths.get(s"$stage/$t")).iterator()
@@ -74,12 +71,7 @@ object EmptyCheck {
   def main(args: Array[String]): Unit = {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val rows = args.drop(1).headOption.map(_.toInt).getOrElse(0)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val dir = java.nio.file.Files
       .createTempDirectory("graft_empty").toString
     buildEmptyDir(spark, srcDir, dir, rows)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print the formatted physical plan (and an exchange
   * census) for named SparkEntry queries — the `.explain` feedback loop
   * the scale audit runs after every operator change.
@@ -11,17 +9,9 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val names = args.tail
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+    val spark = Harness.session()
+    Harness.select(args.tail.toSeq).foreach { case (name, fn) =>
+      val df = fn(spark, sfDir)
       df.collect() // force AQE-final plan
       val plan = df.queryExecution.executedPlan.toString
       val exchanges = plan.linesIterator.count(_.contains("Exchange"))

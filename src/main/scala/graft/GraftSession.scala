@@ -11,6 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object GraftSession {
 
+  /** The one definition of a graft session: these confs, [[sqlConfs]]
+    * and `GraftExtensions` (`RewriteSetOps`, graft's SQL functions). */
   def builder(master: String = "local[*]",
               shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()
@@ -20,13 +22,8 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark has no
-      // native type for; read as BIGINT nanos and convert explicitly.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        ObjectAggFallbackGroups.toString)
+      .config(sqlConfs.toMap)
 
   /** Every graft UDAF (TopKPairs, TopKHeap, MisraGries, KmvSketch,
     * sketch-as-state) keeps O(k)-bounded per-group state, so the
@@ -64,28 +61,36 @@ object GraftSession {
     */
   val ObjectAggFallbackGroups: Int = 1 << 21
 
-  /** Create a session and register graft SQL functions. */
-  def getOrCreate(master: String = "local[*]"): SparkSession = {
-    val spark = builder(master).getOrCreate()
-    functions.registerAll(spark)
-    spark
-  }
+  /** The SQL confs graft's results depend on: [[builder]] sets them,
+    * and [[prepare]] sets them on a session graft did not build.
+    */
+  val sqlConfs: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    // events.parquet carries TIMESTAMP(NANOS) which Spark has no
+    // native type for; read as BIGINT nanos and convert explicitly.
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" ->
+      ObjectAggFallbackGroups.toString)
 
-  /** Ensure graft SQL functions exist on an externally created session
-    * (the driver builds its own SparkSession for Verify/Bench).
+  /** Create (or reuse) a session in the state [[builder]] defines. */
+  def getOrCreate(master: String = "local[*]"): SparkSession =
+    prepare(builder(master).getOrCreate())
+
+  /** Bring a session graft did not build (the driver may build its own
+    * for Verify/Bench) to the state [[builder]] gives it. Each step runs
+    * only where it is missing, so a session in that state is left as is.
+    * A built session has `RewriteSetOps` and the SQL functions from
+    * `GraftExtensions`; any other gets the rule here, as an extra
+    * optimization, in the step that registers the functions.
     */
   def prepare(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set(
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      ObjectAggFallbackGroups.toString)
-    // graft optimizer rules, for sessions not built via `builder`
-    val extra = spark.experimental.extraOptimizations
-    if (!extra.contains(graft.plans.RewriteSetOps)) {
-      spark.experimental.extraOptimizations = extra :+ graft.plans.RewriteSetOps
+    sqlConfs.foreach { case (k, v) =>
+      if (!spark.conf.getOption(k).contains(v)) spark.conf.set(k, v)
     }
-    functions.registerAll(spark)
+    if (!functions.registered(spark)) {
+      spark.experimental.extraOptimizations :+= graft.plans.RewriteSetOps
+      functions.registerAll(spark)
+    }
     spark
   }
 }

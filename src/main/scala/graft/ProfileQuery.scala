@@ -1,27 +1,21 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.GraftBridge
 
 /** Dev tool: decompose a query's wall-clock into driver-side phases
   * (DataFrame construction + analysis, optimization/planning) vs
   * execution, and count the jobs/stages/tasks the run schedules —
   * the measurement behind the r15 per-query-floor work (guide §1).
+  * Each query runs three times; a last line gives the median.
   *
   * Usage: runMain graft.ProfileQuery <sfDir> <query> [query...]
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
+    val spark = Harness.session()
+    Harness.warmUp(spark)
 
     @volatile var jobs = 0
     @volatile var stages = 0
@@ -44,16 +38,17 @@ object ProfileQuery {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    args.tail.foreach { name =>
-      (1 to 3).foreach { i =>
+    Harness.select(args.tail.toSeq).foreach { case (name, fn) =>
+      val runs = (1 to 3).map { i =>
+        GraftBridge.drainListenerBus(spark.sparkContext)
         jobs = 0; stages = 0; tasks = 0; stageLog.clear()
         val t0 = System.nanoTime()
-        val df = SparkEntry.queries(name)(spark, sfDir)
+        val df = fn(spark, sfDir)
         val t1 = System.nanoTime() // construction (incl. any eager jobs)
         val jobsConstr = jobs
         df.count()
         val t2 = System.nanoTime()
-        Thread.sleep(120) // let the listener bus drain
+        GraftBridge.drainListenerBus(spark.sparkContext)
         val phases = df.queryExecution.tracker.phases
           .map { case (k, v) => s"$k=${v.endTimeMs - v.startTimeMs}ms" }
           .mkString(" ")
@@ -65,7 +60,9 @@ object ProfileQuery {
         if (!stageLog.isEmpty)
           println("       slow stages: " + stageLog.asScala.mkString(", "))
         spark.catalog.clearCache()
-      }
+        (t2 - t0) / 1e9
+      }.sorted
+      println(f"[time] $name%-24s median ${runs(1)}%.3f s  (${runs.map(r => f"$r%.2f").mkString(", ")})")
     }
     spark.stop()
   }

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.GraftBridge.{column => toCol, expression => toExpr}
 
 /** Column-level graft functions (custom Catalyst expressions exposed as
@@ -138,36 +140,33 @@ package object functions {
     */
   def once(c: Column): Column = toCol(Once(toExpr(c)))
 
+  /** graft's SQL functions, name → builder over the call's argument
+    * expressions: [[registerAll]] registers them on a session, and
+    * `graft.plans.GraftExtensions` injects them into one it builds.
+    */
+  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "hilbert_index" -> (e =>
+      HilbertIndex(e(0), e(1), e(2).eval().asInstanceOf[Int])),
+    "morton_index" -> (e =>
+      MortonIndex(e(0), e(1), e(2).eval().asInstanceOf[Int])),
+    "minhash" -> (e =>
+      MinHashSignature(e(0), e(1).eval().asInstanceOf[Int], 0L)),
+    "simhash64" -> (e => SimHash64(e(0))),
+    "shingles3" -> (e => Shingle3Distinct(e(0))),
+    "salted_md5_minhash" -> (e =>
+      SaltedMd5MinHash(e(0), e(1).eval().asInstanceOf[Int])),
+    "gram_md5" -> (e => GramMd5(e(0), e(1).eval().asInstanceOf[Int])))
+
   /** Register graft functions for SQL use on this session. */
   def registerAll(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction(
-      "hilbert_index",
-      exprs => HilbertIndex(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Int]),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "morton_index",
-      exprs => MortonIndex(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Int]),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "minhash",
-      exprs => MinHashSignature(exprs(0),
-        exprs(1).eval().asInstanceOf[Int], 0L),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs(0)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "shingles3", exprs => Shingle3Distinct(exprs(0)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "salted_md5_minhash",
-      exprs => SaltedMd5MinHash(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "gram_md5",
-      exprs => GramMd5(exprs(0), exprs(1).eval().asInstanceOf[Int]),
-      "built-in")
+    sqlFunctions.foreach { case (name, builder) =>
+      registry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
+
+  /** Whether every graft SQL function is registered on this session. */
+  def registered(spark: SparkSession): Boolean =
+    sqlFunctions.forall { case (name, _) => spark.sessionState
+      .functionRegistry.functionExists(FunctionIdentifier(name)) }
 }

@@ -1,7 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, Size}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, ExpressionInfo, Size}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, StringType}
@@ -37,13 +38,21 @@ object RewriteSetOps extends Rule[LogicalPlan] {
     }
 }
 
-/** Session extension entry point:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)…` —
-  * used by GraftSession; for externally built sessions,
-  * `GraftSession.prepare` installs the same rules via
-  * `spark.experimental.extraOptimizations`.
+/** Session extension entry point: `withExtensions(new GraftExtensions)`
+  * on a session builder, as `GraftSession.builder` does. It installs
+  * `RewriteSetOps` once, in the "Pre CBO Rules" batch
+  * (`injectOptimizerRule` would put it in both operator-optimization
+  * batches), and injects graft's SQL functions. `GraftSession.prepare`
+  * finds those functions and adds nothing; a session built without
+  * this extension gets the rule from `prepare`, as an extra
+  * optimization.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(extensions: SparkSessionExtensions): Unit =
-    extensions.injectOptimizerRule(_ => RewriteSetOps)
+  override def apply(extensions: SparkSessionExtensions): Unit = {
+    extensions.injectPreCBORule(_ => RewriteSetOps)
+    graft.functions.sqlFunctions.foreach { case (name, builder) =>
+      extensions.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(getClass.getName, name), builder))
+    }
+  }
 }

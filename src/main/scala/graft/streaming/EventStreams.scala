@@ -85,7 +85,16 @@ object EventStreams {
         .start()
       try q.processAllAvailable() finally q.stop()
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(name)
+    takeSink(spark, name)
+  }
+
+  /** The rows of memory sink `name`, resolved before its view is
+    * dropped: the frame alone holds them, and no view outlives it. */
+  private[streaming] def takeSink(spark: SparkSession,
+                                  name: String): DataFrame = {
+    val rows = spark.table(name)
+    spark.catalog.dropTempView(name)
+    rows
   }
 
   /** G1 — streaming tumbling-window aggregation (1 h event-time
@@ -256,7 +265,7 @@ object EventStreams {
       .start()
     try q.processAllAvailable() finally q.stop()
     // one input batch → one (final) update per user
-    spark.table(name)
+    takeSink(spark, name)
       .select($"user_id", $"n",
         (floor($"total_cents".cast("double") / 100.0 * 100.0 + 0.5)
           / 100.0).as("total_value"))
@@ -332,7 +341,7 @@ object EventStreams {
     // keep the last update per key (spec feeds time-ordered slices)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"event_type").orderBy($"n_events".desc)
-    spark.table(name)
+    takeSink(spark, name)
       .withColumn("rn", row_number().over(w))
       .filter($"rn" === 1)
       .select($"event_type", $"n_events",
@@ -462,7 +471,7 @@ object EventStreams {
         .start()
       try q.processAllAvailable() finally q.stop()
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(name)
+    takeSink(spark, name)
       // latest update per user (A25 argmax): upd strictly increases
       // per key, so max(struct) picks the newest row even when the
       // sink holds one row per (user, trigger)
@@ -691,7 +700,7 @@ object EventStreams {
         .start()
       try q.processAllAvailable() finally q.stop()
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(name)
+    takeSink(spark, name)
       .orderBy($"user_id", $"start_us")
   }
 
@@ -760,7 +769,7 @@ object EventStreams {
         .start()
       try q.processAllAvailable() finally q.stop()
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(name)
+    takeSink(spark, name)
       // latest update per key (A25 argmax, the G18 multi-batch stance)
       .groupBy($"event_type")
       .agg(max(struct($"upd", $"n", $"cum_dev", $"min_cum", $"max_cum",

@@ -252,7 +252,7 @@ object TextStreams {
         .start()
       try q.processAllAvailable() finally q.stop()
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(name)
+    EventStreams.takeSink(spark, name)
       .groupBy($"source", $"rnk")
       .agg(max(struct($"upd", $"doc_id", $"quality", $"n_source_docs"))
         .as("s"))
@@ -316,7 +316,7 @@ object TextStreams {
         .start()
       try q.processAllAvailable() finally q.stop()
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(name)
+    EventStreams.takeSink(spark, name)
       .groupBy($"lang", $"source", $"rnk")
       .agg(max(struct($"upd", $"doc_id", $"h")).as("s"))
       .select($"lang", $"source", $"rnk", $"s.doc_id".as("doc_id"),

@@ -20,4 +20,10 @@ object GraftBridge {
     val sc = new org.apache.spark.util.SerializableConfiguration(conf)
     () => sc.value
   }
+
+  /** Wait until the listener bus has delivered every posted event, so
+    * listener counters are complete before they are read.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -6,7 +6,6 @@ class ExtensionsSpec extends SparkSpecBase {
   import spark.implicits._
 
   test("RewriteSetOps rewrites size(array_intersect) to intersect_size") {
-    GraftSession.prepare(spark)
     // non-literal inputs (literals get constant-folded before we look)
     val df = Tables.load(spark, sf, "documents").limit(50)
       .select(split($"text", " ").as("a"),
@@ -34,5 +33,17 @@ class ExtensionsSpec extends SparkSpecBase {
     assert(!optimized.contains("intersect_size"))
     // built-in counts null as a common element
     assert(df.collect().head.getInt(0) === 2)
+  }
+
+  test("RewriteSetOps runs in exactly one optimizer batch") {
+    SparkEntry.queries("q1_pricing_summary")(spark, sf)
+    // `batches` and `Batch` are protected in RuleExecutor
+    def call(o: AnyRef, m: String): AnyRef = o.getClass.getMethod(m).invoke(o)
+    val optimizer = spark.sessionState.optimizer
+    val withRule = call(optimizer, "batches").asInstanceOf[Seq[AnyRef]]
+      .filter(b => call(b, "rules").asInstanceOf[Seq[AnyRef]]
+        .exists(_ eq graft.plans.RewriteSetOps))
+      .map(call(_, "name"))
+    assert(withRule.size === 1, withRule.mkString(", "))
   }
 }

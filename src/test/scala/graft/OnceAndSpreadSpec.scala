@@ -34,7 +34,9 @@ class OnceAndSpreadSpec extends SparkSpecBase {
     // the optimized plan must keep exactly ONE md5 evaluation: the
     // un-barriered version duplicates it into the pushed filter
     def md5Count(p: org.apache.spark.sql.DataFrame): Int =
-      "md5".r.findAllIn(p.queryExecution.optimizedPlan.toString).length
+      p.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(
+        _.collect { case m: org.apache.spark.sql.catalyst.expressions.Md5 => m }))
+        .length
     assert(md5Count(df) === 1, "once() must keep a single evaluation")
     assert(md5Count(plain) >= 2,
       "control: pushdown duplicates the un-barriered expression " +

@@ -3,7 +3,6 @@ package graft
 class SqlFunctionsSpec extends SparkSpecBase {
 
   test("graft functions are callable from SQL after registerAll") {
-    GraftSession.prepare(spark)
     val r = spark.sql(
       """SELECT hilbert_index(3, 4, 14) AS h,
         |       morton_index(3, 4, 14) AS m,
@@ -18,6 +17,20 @@ class SqlFunctionsSpec extends SparkSpecBase {
     assert(r.getLong(3) !== 0L)
     assert(r.getSeq[String](4) === Seq("a b c", "b c d"))
     assert(r.getSeq[Long](5).length === 4)
+  }
+
+  test("a query call on a prepared session registers nothing again") {
+    val registry = spark.sessionState.functionRegistry
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("hilbert_index")
+    SparkEntry.queries("q1_pricing_summary")(spark, sf)
+    val builder = registry.lookupFunctionBuilder(id)
+    val info = registry.lookupFunction(id)
+    SparkEntry.queries("q1_pricing_summary")(spark, sf)
+    assert(builder.isDefined && info.isDefined)
+    assert(registry.lookupFunctionBuilder(id).get eq builder.get)
+    // each registration makes a new ExpressionInfo; the builder is a
+    // non-capturing lambda, the same instance on every registration
+    assert(registry.lookupFunction(id).get eq info.get)
   }
 
   test("porter_stem expression ≡ PorterStemmer.stem through the codegen path") {

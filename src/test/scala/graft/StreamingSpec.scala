@@ -10,6 +10,9 @@ class StreamingSpec extends SparkSpecBase {
     val stream = EventStreams.windowAgg(spark, sf).collect()
     val batch = Events.windowAgg(spark, sf).collect()
     assert(stream.map(_.toString).toSeq === batch.map(_.toString).toSeq)
+    // the rows above were read after the memory sink's view was dropped
+    assert(!spark.catalog.listTables().collect()
+      .exists(_.name.startsWith("graft_stream_window")))
   }
 
   test("streaming sessionization produces contiguous per-user sequences") {

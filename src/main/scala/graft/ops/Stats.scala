@@ -112,9 +112,12 @@ object Stats {
         ($"o" - $"rt".cast("double") * $"ct" / $"nn") /
         ($"rt".cast("double") * $"ct" / $"nn"))
         .as("contrib"), $"event_type", $"dow", $"nn")
+    // the grid is (types × 7)-bounded, so set sizes count its distinct
+    // keys without the distinct-aggregate rewrite, whose Expand orders
+    // its groups by expression-id hashes (two plan forms per build)
     grid.agg(
-        countDistinct($"event_type").as("n_types"),
-        countDistinct($"dow").as("n_dows"),
+        size(collect_set($"event_type")).cast("bigint").as("n_types"),
+        size(collect_set($"dow")).cast("bigint").as("n_dows"),
         max($"nn").as("n_events"),
         sort_array(collect_list(struct($"event_type", $"dow",
           $"contrib"))).as("cs"))

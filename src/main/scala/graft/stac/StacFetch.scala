@@ -1,13 +1,15 @@
 package graft.stac
 
 import java.net.URI
-import java.util.concurrent.Executors
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{ExecutorCompletionService, Executors}
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
-
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Distributed STAC-item fetch — the reference's core runtime verb
   * (fetch.py:15–92: bounded-concurrency async gets, one store per
@@ -17,10 +19,12 @@ import org.apache.spark.sql.functions._
   *   - the link set is a DataFrame, partitioned by Spark — at 100 TB
   *     the fetch parallelism is executors × `maxConcurrent`, not one
   *     process's event loop;
-  *   - within each partition a bounded thread pool replaces the
-  *     asyncio semaphore (fetch.py:51 `Semaphore(max_concurrent)`),
-  *     so per-task socket pressure is capped no matter how large the
-  *     partition is;
+  *   - within each partition a SLIDING bound of `maxConcurrent`
+  *     outstanding results replaces the asyncio semaphore (fetch.py:51
+  *     `Semaphore(max_concurrent)`), so per-task socket pressure and
+  *     memory are capped however large the partition is;
+  *   - each body is parsed ONCE, into the fetch cache that the items
+  *     and the failed side both derive from;
   *   - one transport connection per (scheme, netloc) per partition
   *     mirrors the store-per-netloc reuse of fetch.py:33–49;
   *   - failures become ROWS (url + error), not exceptions — the
@@ -45,8 +49,12 @@ object StacFetch {
   }
 
   /** Fetch every `urlCol` of `links`. Returns one row per input link:
-    * (url, body, error) — exactly one of body/error is null. Bounded
-    * by `maxConcurrent` in-flight requests per partition.
+    * (url, body, error) — exactly one of body/error is null. Each
+    * partition keeps at most `maxConcurrent` results outstanding (GETs
+    * in flight plus bodies not yet emitted) and starts the next GET
+    * once a result is emitted, so a slow GET holds up only its own
+    * slot. Rows come out in completion order; memory is
+    * O(`maxConcurrent`) bodies per partition.
     */
   def fetchRaw(links: DataFrame, urlCol: String, transport: Transport,
                maxConcurrent: Int = 50): DataFrame = {
@@ -55,70 +63,55 @@ object StacFetch {
     require(maxConcurrent >= 1, s"maxConcurrent must be >= 1")
     val urls: Dataset[String] = links.select(col(urlCol).cast("string")).as[String]
     urls.mapPartitions { part =>
-      if (part.isEmpty) Iterator.empty
-      else {
-        val stores =
-          scala.collection.mutable.Map.empty[(String, String), String => Array[Byte]]
-        val pool = Executors.newFixedThreadPool(maxConcurrent)
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutorService(pool)
-        // the returned iterator is lazy — release the pool when the
-        // task ends (fully consumed, limited, or failed), not before
-        val tc = org.apache.spark.TaskContext.get()
-        if (tc != null) {
-          tc.addTaskCompletionListener[Unit](_ => pool.shutdown())
+      val stores = collection.mutable.Map.empty[(String, String), String => Array[Byte]]
+      val pool = Executors.newFixedThreadPool(maxConcurrent)
+      // the returned iterator is lazy — release the pool when the
+      // task ends (fully consumed, limited, or failed), not before
+      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => pool.shutdown()))
+      val done = new ExecutorCompletionService[(String, String, String)](pool)
+      // store creation is sequential and lazy (first link wins), on
+      // the task thread; the gets themselves run on the pool
+      def start(url: String): Unit = {
+        val get: String => Array[Byte] =
+          try {
+            val u = new URI(url)
+            stores.getOrElseUpdate((u.getScheme, u.getAuthority),
+              transport.open(u.getScheme, u.getAuthority))
+          } catch { case e: Exception => _ => throw e }
+        done.submit { () =>
+          try (url, new String(get(url), UTF_8), null: String)
+          catch { case e: Exception =>
+            (url, null: String, s"${e.getClass.getSimpleName}: ${e.getMessage}") }
         }
-        // store creation is sequential and lazy (first link wins),
-        // the gets themselves fan out on the bounded pool. Futures
-        // are launched and awaited in maxConcurrent-sized WINDOWS so
-        // per-partition memory is O(one window of bodies), not
-        // O(partition bytes) — the pool is window-sized anyway, so
-        // windowing costs no concurrency, only cross-window
-        // pipelining. `grouped` on the iterator is lazy: a window's
-        // gets start only when the downstream consumer reaches it.
-          part.grouped(maxConcurrent).flatMap { window =>
-            val futures = window.map { url =>
-              val getter =
-                try {
-                  val u = new URI(url)
-                  Right(stores.getOrElseUpdate(
-                    (u.getScheme, u.getAuthority),
-                    transport.open(u.getScheme, u.getAuthority)))
-                } catch { case e: Exception => Left(e) }
-              getter match {
-                case Left(e) => Future.successful(
-                  (url, null: String, s"${e.getClass.getSimpleName}: ${e.getMessage}"))
-                case Right(get) => Future {
-                  try {
-                    (url, new String(get(url), java.nio.charset.StandardCharsets.UTF_8),
-                      null: String)
-                  } catch {
-                    case e: Exception =>
-                      (url, null: String,
-                        s"${e.getClass.getSimpleName}: ${e.getMessage}")
-                  }
-                }
-              }
-            }
-            futures.map(f => Await.result(f, Duration.Inf))
-          } ++ { pool.shutdown(); Iterator.empty }
+      }
+      var outstanding = 0
+      new Iterator[(String, String, String)] {
+        // refills here, not in next(): an emitted row's slot is reused
+        // only once the consumer has moved on from it
+        def hasNext: Boolean = {
+          while (outstanding < maxConcurrent && part.hasNext) {
+            start(part.next()); outstanding += 1
+          }
+          if (outstanding == 0) pool.shutdown()
+          outstanding > 0
+        }
+        def next(): (String, String, String) = {
+          if (!hasNext) throw new NoSuchElementException("fetch exhausted")
+          outstanding -= 1; done.take().get()
+        }
       }
     }.toDF("url", "body", "error")
   }
 
   /** The reference's (successful_items, failed_links) pair
     * (fetch.py:78–88): items parsed from the fetched STAC JSON with
-    * an explicit schema (malformed bodies join the failed side), and
-    * failed links carrying their error strings for retry/accounting.
+    * an explicit schema (malformed bodies and items without a datetime
+    * join the failed side), and failed links carrying their error
+    * strings for retry/accounting.
     */
   def fetchItems(links: DataFrame, urlCol: String, transport: Transport,
-                 maxConcurrent: Int = 50): (DataFrame, DataFrame) = {
-    // items and failed both derive from raw — persist so each link is
-    // fetched exactly once (the reference gathers once, fetch.py:70-76)
-    val raw = fetchRaw(links, urlCol, transport, maxConcurrent)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    splitItems(raw)
-  }
+                 maxConcurrent: Int = 50): (DataFrame, DataFrame) =
+    splitItems(fetchParsed(links, urlCol, transport, maxConcurrent))
 
   /** Scoped variant for repeated callers (micro-batches, retry
     * loops): the fetch cache is unpersisted when `use` returns, so
@@ -127,10 +120,9 @@ object StacFetch {
   def fetchItemsScoped[T](links: DataFrame, urlCol: String,
                           transport: Transport, maxConcurrent: Int = 50)
                          (use: (DataFrame, DataFrame) => T): T = {
-    val raw = fetchRaw(links, urlCol, transport, maxConcurrent)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try { val (items, failed) = splitItems(raw); use(items, failed) }
-    finally raw.unpersist()
+    val parsed = fetchParsed(links, urlCol, transport, maxConcurrent)
+    try { val (items, failed) = splitItems(parsed); use(items, failed) }
+    finally parsed.unpersist()
   }
 
   /** Bounded retry over the failed side: transient failures (the
@@ -138,78 +130,96 @@ object StacFetch {
     * re-queues) are re-fetched up to `attempts` passes; the return is
     * (all items, terminally failed). Each pass fetches ONLY the
     * previous pass's failures, so the work shrinks geometrically with
-    * the transient-failure rate; per-pass caches are failure-sized,
-    * not corpus-sized.
+    * the transient-failure rate.
     */
   def fetchWithRetries(links: DataFrame, urlCol: String,
                        transport: Transport, attempts: Int = 3,
                        maxConcurrent: Int = 50): (DataFrame, DataFrame) = {
     require(attempts >= 1, "attempts must be >= 1")
-    var (items, failed) = fetchItems(links, urlCol, transport, maxConcurrent)
-    var pass = 1
-    while (pass < attempts && !failed.isEmpty) {
-      // retry passes are failure-sized, so each one materializes its
-      // (items, failed) via eager localCheckpoint inside the SCOPED
-      // fetch — the pass's raw-body cache is unpersisted before the
-      // next pass starts, so retries never stack corpus caches (only
-      // the first pass's item cache, the result, stays live)
-      val (more, stillFailed) = fetchItemsScoped(
-        failed.select(org.apache.spark.sql.functions.col("url").as(urlCol)),
-        urlCol, transport, maxConcurrent) { (m, f) =>
-        (m.localCheckpoint(true), f.localCheckpoint(true))
+    // every pass materializes its (items, failed) via eager
+    // localCheckpoint inside the SCOPED fetch, so its fetch cache is
+    // gone before the next pass starts; only the returned frames'
+    // checkpoints stay, a superseded failed side's is dropped
+    def pass(in: DataFrame) = fetchItemsScoped(in, urlCol, transport,
+        maxConcurrent) { (m, f) => (m.localCheckpoint(true), f.localCheckpoint(true)) }
+    var (items, failed) = pass(links)
+    var n = 1
+    while (n < attempts && !failed.isEmpty) {
+      val (more, stillFailed) = pass(failed.select(col("url").as(urlCol)))
+      failed.queryExecution.logical.foreach {
+        case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+        case _ =>
       }
       items = items.unionByName(more)
       failed = stillFailed
-      pass += 1
+      n += 1
     }
     (items, failed)
   }
 
-  private def splitItems(raw: DataFrame): (DataFrame, DataFrame) = {
-    val spark = raw.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.types._
-    // The reference writes the WHOLE item into stac-geoparquet
-    // (write.py:219 via rustac) — properties real consumers filter on
-    // (eo:cloud_cover, sun geometry) and full asset objects, not just
-    // hrefs. The schema here mirrors that breadth.
-    val itemSchema = StructType(Seq(
-      StructField("id", StringType),
-      StructField("collection", StringType),
-      StructField("properties",
-        StructType(Seq(
-          StructField("datetime", StringType),
-          StructField("eo:cloud_cover", LongType),
-          StructField("view:sun_azimuth", LongType),
-          StructField("view:sun_elevation", LongType)))),
-      StructField("grid", StructType(Seq(
-        StructField("lon10", LongType), StructField("lat10", LongType)))),
-      StructField("assets", MapType(StringType,
-        StructType(Seq(
-          StructField("href", StringType),
-          StructField("type", StringType),
-          StructField("title", StringType)))))))
-    val parsed = raw.filter($"error".isNull)
-      .withColumn("item", from_json($"body", itemSchema))
-    val props = col("item").getField("properties")
-    val items = parsed.filter($"item.id".isNotNull)
+  // The reference writes the WHOLE item into stac-geoparquet
+  // (write.py:219 via rustac) — properties real consumers filter on
+  // (eo:cloud_cover, sun geometry) and full asset objects, not just
+  // hrefs. The schema here mirrors that breadth.
+  private val itemSchema = StructType(Seq(
+    StructField("id", StringType),
+    StructField("collection", StringType),
+    StructField("properties",
+      StructType(Seq(
+        StructField("datetime", StringType),
+        StructField("eo:cloud_cover", LongType),
+        StructField("view:sun_azimuth", LongType),
+        StructField("view:sun_elevation", LongType)))),
+    StructField("grid", StructType(Seq(
+      StructField("lon10", LongType), StructField("lat10", LongType)))),
+    StructField("assets", MapType(StringType,
+      StructType(Seq(
+        StructField("href", StringType),
+        StructField("type", StringType),
+        StructField("title", StringType)))))))
+
+  /** The fetch cache both sides of [[splitItems]] derive from: (url,
+    * error, item), each body parsed by ONE `from_json`. Persisted so
+    * each link is fetched and parsed exactly once (the reference
+    * gathers once, fetch.py:70-76), and the cache holds parsed items,
+    * not the JSON bodies.
+    */
+  private def fetchParsed(links: DataFrame, urlCol: String,
+                          transport: Transport, maxConcurrent: Int): DataFrame =
+    fetchRaw(links, urlCol, transport, maxConcurrent)
+      .select(col("url"), col("error"), from_json(col("body"), itemSchema).as("item"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** Items are the rows with an id and a datetime; every other row is
+    * on the failed side, with its fetch error or as a `MalformedItem`.
+    */
+  private def splitItems(parsed: DataFrame): (DataFrame, DataFrame) = {
+    val props = col("item.properties")
+    // lenient RFC 3339: the cast's forms, plus minute precision (…T13:57Z)
+    val dt = props.getField("datetime")
+    val ts = coalesce(try_to_timestamp(dt),
+      try_to_timestamp(dt, lit("yyyy-MM-dd'T'HH:mmXXX")))
+    val ok = col("item.id").isNotNull && ts.isNotNull
+    val items = parsed.filter(ok)
       .select(
-        $"url".as("url_stac"),
-        $"item.id".as("item_id"),
-        $"item.collection".as("collection"),
-        to_timestamp(props.getField("datetime")).as("ts"),
+        col("url").as("url_stac"),
+        col("item.id").as("item_id"),
+        col("item.collection").as("collection"),
+        ts.as("ts"),
         props.getField("eo:cloud_cover").as("cloud_cover"),
         props.getField("view:sun_azimuth").as("sun_azimuth"),
         props.getField("view:sun_elevation").as("sun_elevation"),
         // grid cell → centroid, the catalog's convention (StacSynth:78-81)
-        ($"item.grid.lon10" / 10.0 - 180.0 + 0.05).as("lon"),
-        ($"item.grid.lat10" / 10.0 - 90.0 + 0.05).as("lat"),
+        (col("item.grid.lon10") / 10.0 - 180.0 + 0.05).as("lon"),
+        (col("item.grid.lat10") / 10.0 - 90.0 + 0.05).as("lat"),
         // full per-band asset structs (href/type/title) ride through to
         // the geoparquet rows (write.py:219 rustac writes whole items)
-        $"item.assets".as("assets"))
-    val failed = raw.filter($"error".isNotNull).select($"url", $"error")
-      .unionByName(parsed.filter($"item.id".isNull)
-        .select($"url", lit("MalformedItem: unparseable STAC JSON").as("error")))
+        col("item.assets").as("assets"))
+    val failed = parsed.filter(!ok).select(col("url"),
+      coalesce(col("error"),
+        when(col("item.id").isNull, lit("MalformedItem: unparseable STAC JSON"))
+          .otherwise(lit("MalformedItem: missing or unparseable datetime")))
+        .as("error"))
     (items, failed)
   }
 }

@@ -201,16 +201,16 @@ class HttpTransportSpec extends SparkSpecBase
       HttpFixture.DeadIds.size)
   }
 
-  test("bounded concurrency holds over a slow real netloc (no deadlock, window <= maxConcurrent)") {
+  test("bounded concurrency holds over a slow real netloc (no deadlock, in flight <= maxConcurrent)") {
     HttpFixture.slowMaxInFlight.set(0)
     val urls = (0 until 16)
       .map(i => s"http://127.0.0.1:$port/slow/$i").toDF("stac_link")
-      .repartition(1) // one partition -> one pool: the global window
+      .repartition(1) // one partition -> one pool: the global bound
     val raw = StacFetch.fetchRaw(urls, "stac_link", new HttpTransport,
       maxConcurrent = 8)
     assert(raw.filter($"error".isNull).count() === 16)
     val peak = HttpFixture.slowMaxInFlight.get()
-    assert(peak <= 8, s"in-flight window $peak exceeded maxConcurrent=8")
+    assert(peak <= 8, s"$peak in flight exceeded maxConcurrent=8")
     assert(peak > 1, s"expected real overlap on the slow netloc, got $peak")
   }
 

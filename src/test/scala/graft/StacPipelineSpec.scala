@@ -407,8 +407,8 @@ class StacPipelineSpec extends SparkSpecBase {
         $"sun_elevation" =!= $"c_el").count() === 0)
   }
 
-  test("fetch windows bound per-partition memory: window w starts only after window w-1 completes") {
-    import org.apache.spark.sql.functions._
+  test("fetch bound slides: < maxConcurrent outstanding per partition, a slow GET stalls no other slot") {
+    import org.apache.spark.TaskContext
     import scala.jdk.CollectionConverters._
     val catalog = StacSynth.catalog(spark, sf).cache()
     val bodies = catalog.select($"url_stac", $"item_json").as[(String, String)]
@@ -418,60 +418,120 @@ class StacPipelineSpec extends SparkSpecBase {
     WindowProbeTransport.reset()
     val mc = 4
     val raw = StacFetch.fetchRaw(links, "stac_link",
-      new WindowProbeTransport(bodies), maxConcurrent = mc)
-    assert(raw.count() === 40)
-    // For each partition, the j-th get to START (0-based) must observe
-    // at least floor(j/mc)*mc COMPLETED gets in its partition: awaiting
-    // in windows means a new window launches only after the previous
-    // one fully finished (the whole-partition materialization this
-    // replaces submits everything up front, so the (mc+1)-th start
-    // would observe ~1 completion, not mc).
-    val byPart = WindowProbeTransport.observations.asScala.toSeq
-      .groupBy(_._1).values
-    assert(byPart.nonEmpty)
-    byPart.foreach { obs =>
-      obs.sortBy(_._2).zipWithIndex.foreach { case ((_, _, doneAtStart), j) =>
-        assert(doneAtStart >= (j / mc) * mc,
-          s"get #$j started with only $doneAtStart completed; " +
-            s"window semantics require >= ${(j / mc) * mc}")
-      }
+      new WindowProbeTransport(bodies, mc), maxConcurrent = mc)
+    // rows are counted as emitted by a consumer in the same task
+    val emitted = raw.as[(String, String, String)].mapPartitions { rows =>
+      val p = TaskContext.getPartitionId()
+      rows.map { r => WindowProbeTransport.onEmit(p); r }
+    }.count()
+    assert(emitted === 40)
+    val obs = WindowProbeTransport.observations.asScala.toSeq
+    assert(obs.map(_._1).toSet === Set(0, 1))
+    // (a) memory: started but not yet emitted stays below mc at every
+    // GET start, this one not counted
+    obs.foreach { case (p, startedBefore, emittedAtStart) =>
+      assert(startedBefore - emittedAtStart < mc,
+        s"partition $p: $startedBefore started, $emittedAtStart emitted")
     }
+    // (b) sliding: each partition's first GET waits for mc other GETs
+    // of its partition to complete; in windows only mc - 1 others could
+    // run beside it, and it would time out
+    val released = WindowProbeTransport.released.asScala
+    assert(released.keySet === Set(0, 1))
+    assert(released.values.forall(_.booleanValue),
+      s"a slow GET held up its window: $released")
+  }
+
+  /** A STAC item body of `id` with `datetime` in its properties. */
+  private def itemBody(id: String, datetime: Option[String]): String =
+    s"""{"type": "Feature", "id": "$id", "collection": "HLSL30_2.0",
+       | "properties": {${datetime.fold("")(d => s""""datetime": "$d", """)}"eo:cloud_cover": 7},
+       | "grid": {"lon10": 1000, "lat10": 1300}, "assets": {}}""".stripMargin
+
+  test("a datetime without seconds is parsed; a missing or unparseable one fails the item, not the month") {
+    val tmp = Files.createTempDirectory("graft-datetime").toString
+    val url = (id: String) => s"https://data.example.com/$id.json"
+    val dts = Map("SEC" -> Some("2023-01-09T13:57:12.345Z"),
+      "MIN" -> Some("2023-01-09T13:57Z"), "BAD" -> Some("not-a-date"),
+      "NONE" -> None)
+    val links = dts.keys.toSeq.map(url).toDF("stac_link")
+    val transport = new MockTransport(
+      dts.map { case (id, dt) => url(id) -> itemBody(id, dt) }, Set.empty)
+    val failed = StacFetch.fetchItemsScoped(links, "stac_link", transport) {
+      (items, failed) =>
+        StacWrite.writeMonthly(spark, items, tmp, "0.1", "HLSL30_2.0", 2023, 1)
+        failed.as[(String, String)].collect().toMap
+    }
+    val written = spark.read
+      .parquet(StacWrite.monthPath(tmp, "0.1", "HLSL30_2.0", 2023, 1))
+      .select($"url_stac", $"ts".cast("string")).as[(String, String)]
+      .collect().toMap
+    assert(written === Map(url("SEC") -> "2023-01-09 13:57:12.345",
+      url("MIN") -> "2023-01-09 13:57:00"))
+    assert(failed.keySet === Set(url("BAD"), url("NONE")))
+    assert(failed.values.forall(_.startsWith("MalformedItem")))
+  }
+
+  test("fetchWithRetries leaves nothing cached but its returned frames' checkpoints") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val url = (i: Int) => s"https://data.example.com/R$i.json"
+    val bodies = (0 until 6).map(i =>
+      url(i) -> itemBody(s"R$i", Some("2023-01-09T13:57:12Z"))).toMap
+    val links = bodies.keys.toSeq.toDF("stac_link").repartition(2)
+    val cachedBefore = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    FlakyTransport.seen.clear()
+    val (items, failed) = StacFetch.fetchWithRetries(links, "stac_link",
+      new FlakyTransport(bodies, Set(url(1)), Set(url(2))), attempts = 3,
+      maxConcurrent = 4)
+    assert(items.count() === 5)
+    assert(failed.select($"url").as[String].collect().toSeq === Seq(url(2)))
+    val ownRdds = Seq(items, failed).flatMap(_.queryExecution.logical
+      .collect { case r: LogicalRDD => r.rdd.id }).toSet
+    val left = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet --
+      cachedBefore -- ownRdds
+    assert(left.isEmpty, s"RDDs left cached by the call: $left")
   }
 }
 
-/** Records, per partition, each get's start ordinal and how many gets
-  * of that partition had COMPLETED when it started — the observable
-  * that distinguishes windowed awaits from whole-partition fan-out.
+/** Per partition: at each GET start, how many GETs of that partition
+  * had started before it and how many rows it had emitted. The
+  * partition's first GET blocks until `mc` of its other GETs have
+  * completed, or until a timeout, and records which came first.
   */
 object WindowProbeTransport {
+  import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
   import java.util.concurrent.atomic.AtomicInteger
-  import java.util.concurrent.ConcurrentHashMap
   val started = new ConcurrentHashMap[Int, AtomicInteger]()
-  val done = new ConcurrentHashMap[Int, AtomicInteger]()
-  // (partitionId, startOrdinal, completedAtStart)
+  val emitted = new ConcurrentHashMap[Int, AtomicInteger]()
+  val others = new ConcurrentHashMap[Int, CountDownLatch]()
+  val released = new ConcurrentHashMap[Int, java.lang.Boolean]()
+  // (partitionId, startedBefore, emittedAtStart)
   val observations =
     new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Int)]()
-  def reset(): Unit = { started.clear(); done.clear(); observations.clear() }
+  def reset(): Unit = {
+    started.clear(); emitted.clear(); others.clear(); released.clear()
+    observations.clear()
+  }
   private def ctr(m: ConcurrentHashMap[Int, AtomicInteger], p: Int) =
     m.computeIfAbsent(p, _ => new AtomicInteger(0))
-  def onStart(p: Int): Unit =
-    observations.add((p, ctr(started, p).getAndIncrement(), ctr(done, p).get()))
-  def onDone(p: Int): Unit = { ctr(done, p).incrementAndGet(); () }
+  def onEmit(p: Int): Unit = { ctr(emitted, p).incrementAndGet(); () }
+  def get(p: Int, mc: Int)(body: => Array[Byte]): Array[Byte] = {
+    val before = ctr(started, p).getAndIncrement()
+    observations.add((p, before, ctr(emitted, p).get()))
+    val latch = others.computeIfAbsent(p, _ => new CountDownLatch(mc))
+    if (before == 0) released.put(p, latch.await(5, TimeUnit.SECONDS))
+    else { Thread.sleep(1); latch.countDown() } // widen the interleaving
+    body
+  }
 }
 
-class WindowProbeTransport(bodies: Map[String, String])
+class WindowProbeTransport(bodies: Map[String, String], mc: Int)
     extends StacFetch.Transport {
   def open(scheme: String, netloc: String): String => Array[Byte] = {
     // `open` runs on the task thread (store creation is sequential);
     // the gets run on pool threads with no TaskContext, so the
     // partition id must be captured HERE
     val p = org.apache.spark.TaskContext.getPartitionId()
-    url => {
-      WindowProbeTransport.onStart(p)
-      try {
-        Thread.sleep(1) // widen the start/completion interleaving window
-        bodies(url).getBytes("UTF-8")
-      } finally WindowProbeTransport.onDone(p)
-    }
+    url => WindowProbeTransport.get(p, mc)(bodies(url).getBytes("UTF-8"))
   }
 }
